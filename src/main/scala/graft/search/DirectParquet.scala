@@ -37,11 +37,6 @@ import org.apache.parquet.io.api.Binary
   */
 object DirectParquet {
 
-  /** Kill switch: SPARK_GRAFT_DIRECT_READS=0 routes every point read back
-    * through the Spark scan path. */
-  val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_DIRECT_READS").contains("0")
-
   /** Observability: completed direct reads / failed-and-fell-back reads
     * (specs pin that point reads actually run direct, not silently on the
     * Spark fallback). */
@@ -146,7 +141,7 @@ object DirectParquet {
     * false too — the Spark path is the source of truth. */
   /** Decode pool: row-group decode is CPU-bound (snappy + Group assembly),
     * so multi-file reads fan out here instead of running single-threaded.
-    * Sized cores/2 (min 4, max 16): MtColdProfile at 300k docs / 8 cold
+    * Sized cores/2 (min 4, max 16): a cold probe at 300k docs with 8
     * clients (disjoint-range baseline, honest sampling) measured 8-client
     * p50 243 / 173 / 150 ms at 8 / 12 / 16 threads (queueing ×2.28 /
     * ×1.82 / ×1.57 over the single-client floor) with single-client
@@ -156,8 +151,7 @@ object DirectParquet {
   private val decodeEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(
-        sys.env.get("SPARK_GRAFT_DECODE_THREADS").map(_.toInt).getOrElse(
-          math.min(16, math.max(4, Runtime.getRuntime.availableProcessors() / 2))),
+        math.min(16, math.max(4, Runtime.getRuntime.availableProcessors() / 2)),
         (r: Runnable) => {
           val t = new Thread(r, "graft-direct-decode"); t.setDaemon(true); t
         }))
@@ -166,7 +160,6 @@ object DirectParquet {
       secondBand: Option[(String, Array[Byte], Array[Byte])] = None,
       intPoints: Option[(String, Array[Int])] = None)
       (each: Group => Unit): Boolean = {
-    if (!enabled) return false
     try {
       val byFile = footers.overlapping(bands).groupBy(_.file).toSeq.sortBy(_._1)
       // band predicate pushed into parquet-mr's filtered reads: column
@@ -208,7 +201,7 @@ object DirectParquet {
       // callers re-check docids at assembly, so this is prune-only anyway.
       // The OR tree must be BALANCED (depth log n): parquet-mr evaluates
       // predicates recursively, and a left-deep fold over a large
-      // env-raised point set (SPARK_GRAFT_DWP_DOC_POINTS_MAX) would throw
+      // point set would throw
       // StackOverflowError — which NonFatal does NOT catch, killing the
       // decode-pool thread under an Await with no timeout.
       def balancedOr(ps: IndexedSeq[FilterPredicate], lo: Int, hi: Int): FilterPredicate =

@@ -166,8 +166,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     }
     Search.traced(s"prewarm-bitmaps(${byDf.length})") {
       byDf.map(_._1).grouped(1024).foreach { b =>
-        bitmapCache.get("w", b)(ks => bitmapRowsT(T.WordDocids, wordDocids, ks))
-        bitmapCache.get("e", b)(ks =>
+        bitmaps("w", b)(ks => bitmapRowsT(T.WordDocids, wordDocids, ks))
+        bitmaps("e", b)(ks =>
           bitmapRowsT(T.ExactWordDocids, exactWordDocids, ks))
       }
     }
@@ -187,9 +187,9 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       headPfxs = pfxs
       Search.traced(s"prewarm-prefix-bitmaps(${pfxs.length})") {
         pfxs.grouped(1024).foreach { b =>
-          bitmapCache.get("p", b)(ks =>
+          bitmaps("p", b)(ks =>
             bitmapRowsT(T.WordPrefixDocids, wordPrefixDocids, ks, "prefix"))
-          bitmapCache.get("q", b)(ks =>
+          bitmaps("q", b)(ks =>
             bitmapRowsT(T.ExactWordPrefixDocids, exactWordPrefixDocids, ks, "prefix"))
         }
       }
@@ -235,7 +235,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         val batchKeys = batch.flatMap { case (w, p, r) =>
           (1 to 7).map(x => yKey(w, p, if (r) "r" else "l", x))
         }
-        bitmapCache.get("y", batchKeys)(_ => prefixPairPointRead(batch))
+        bitmaps("y", batchKeys)(_ => prefixPairPointRead(batch))
       }
     }
     // JIT/code-path warmup: drive representative multi-word RANKED queries
@@ -348,10 +348,31 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   /** Driver-side LRU of forward-index rows for the small-query rank path. */
   lazy val dwpCache: DwpCache = new DwpCache(this)
 
-  /** Driver-side presence-aware LRU of candidate bitmaps (word / prefix
-    * docids point reads + dict-miss prefix range unions) — warm bitmap
-    * candidate resolution runs zero Spark jobs. */
-  lazy val bitmapCache: BitmapCache = new BitmapCache()
+  /** Driver-side presence-aware LRU of candidate bitmaps keyed by
+    * (namespace, key): `word_docids` / `exact_word_docids` /
+    * `word_prefix_docids` / `exact_word_prefix_docids` point reads (ns
+    * `w`/`e`/`p`/`q`), dictionary-miss prefix range unions (`r`), pair and
+    * prefix-pair proximity rows (`x`/`y`) and field word counts (`f`). A key
+    * absent from its table caches as None, so `resolveTreeBitmap` can still
+    * tell "prefix not in the prefix dict" (→ range-union fallback) from
+    * "not fetched yet". Warm bitmap candidate resolution runs zero Spark
+    * jobs (the reference's equivalent reads hit LMDB in-process,
+    * `milli/src/search/mod.rs:136-242`). */
+  private val bitmapCache = new Lru[(String, String), Option[RoaringBitmap]](
+    128L << 20, bm => 64L + bm.fold(0L)(_.getSizeInBytes.toLong))
+
+  /** Fetch-through bitmap lookup in namespace `ns`: `fetch` is called at
+    * most once, with the uncached keys, and returns bitmaps for those
+    * present in the table. Every requested key maps to Some(bitmap) or
+    * None (absent). Returned bitmaps are SHARED — callers must not mutate
+    * them. */
+  private[search] def bitmaps(ns: String, keys: Seq[String])(
+      fetch: Seq[String] => Map[String, RoaringBitmap])
+      : Map[String, Option[RoaringBitmap]] =
+    bitmapCache.getAll(keys.map((ns, _))) { misses =>
+      val got = fetch(misses.map(_._2))
+      misses.iterator.map(m => m -> got.get(m._2)).toMap
+    }.map { case ((_, k), v) => k -> v }
 
   /** Facet level-tree serving caches (FacetLevels): pinned upper levels +
     * max-level probes, keyed (numeric, field) — living on the handle so
@@ -462,12 +483,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * roaring worst case); broader filters keep the streaming plan. */
   private val FilterCacheCap = 1 << 22
 
-  private val filterBmCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Option[RoaringBitmap]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[RoaringBitmap]]): Boolean =
-        size() > 64
-    })
+  private val filterBmCache = new Lru[String, Option[RoaringBitmap]](64, _ => 1)
 
   /** (branch group material, cell doc set) → attribute strata
     * [(attr label, member docs, noRefine)] — the strata depend only on the
@@ -480,13 +496,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * 42k docs); LRU 64 ≈ ~1–2 MB; rotates with the handle. Entries are
     * read-only downstream (the drain and exactness strata never mutate
     * cell bitmaps — static RoaringBitmap ops + clones only). */
-  private[search] val attrStrataMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[AnyRef, IndexedSeq[(Long, RoaringBitmap, Boolean)]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, IndexedSeq[(Long, RoaringBitmap, Boolean)]])
-          : Boolean = size() > 64
-    })
+  private[search] val attrStrataMemo =
+    new Lru[AnyRef, IndexedSeq[(Long, RoaringBitmap, Boolean)]](64, _ => 1)
 
   /** Memo hits (specs pin replay engagement). */
   private[search] val attrStrataMemoHits = new java.util.concurrent.atomic.AtomicLong()
@@ -497,18 +508,15 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * filters on a warm handle run ZERO jobs. None when the result exceeds
     * [[FilterCacheCap]] — callers keep the distributed semi-join plan.
     * The evaluation runs outside the lock (concurrent serving clients). */
-  private[search] def filterBitmap(f: String): Option[RoaringBitmap] = {
-    val hit = filterBmCache.get(f)
-    if (hit != null) return hit
-    val ids = FilterEvaluator
-      .candidates(this, FilterParser.parse(f))
-      .limit(FilterCacheCap + 1)
-      .select($"docid").as[Int].collect()
-    val res: Option[RoaringBitmap] =
-      if (ids.length > FilterCacheCap) None else Some(Bitmaps.fromInts(ids.toSeq))
-    filterBmCache.put(f, res)
-    res
-  }
+  private[search] def filterBitmap(f: String): Option[RoaringBitmap] =
+    filterBmCache.getAll(Seq(f)) { _ =>
+      val ids = FilterEvaluator
+        .candidates(this, FilterParser.parse(f))
+        .limit(FilterCacheCap + 1)
+        .select($"docid").as[Int].collect()
+      Map(f -> (if (ids.length > FilterCacheCap) None
+        else Some(Bitmaps.fromInts(ids.toSeq))))
+    }(f)
 
   // -------------------------------------------------------- planner probes
 
@@ -555,39 +563,23 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   /** LRU of (w1, w2) → prox-1 pair frequency: warm/repeated queries probe
     * word splits without launching a job (the reference's equivalent read
     * hits LMDB in-process, search/mod.rs:136-242). */
-  private val pairFreqCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String), java.lang.Long](1024, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String), java.lang.Long]): Boolean =
-          size() > 65536
-      })
+  private val pairFreqCache = new Lru[(String, String), Long](65536, _ => 1)
 
   /** Batched pair frequency probe for `split_best_frequency`, LRU-cached:
     * one filter for all UNCACHED splits instead of per-pair reads. */
-  def pairFrequencies(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
-    if (pairs.isEmpty) return Map.empty
-    val (hits, misses0) = pairs.distinct.partition(pairFreqCache.containsKey)
-    // pinned-dictionary short-circuit: a pair with a non-corpus-word side
-    // cannot appear in the pair table — frequency 0 with no fetch.
-    // split_best_frequency probes EVERY split point of every query word
-    // and nearly all halves are non-words, so this turns the per-novel-
-    // query pair-frequency job into a driver-side hash probe.
-    val misses = dfLocal match {
-      case Some(m) =>
-        val (in, out) = misses0.partition { case (l, r) =>
-          m.containsKey(l) && m.containsKey(r)
-        }
-        out.foreach(p => pairFreqCache.put(p, java.lang.Long.valueOf(0L)))
-        in
-      case None => misses0
+  def pairFrequencies(pairs: Seq[(String, String)]): Map[(String, String), Long] =
+    pairFreqCache.getAll(pairs) { misses =>
+      // pinned-dictionary short-circuit: a pair with a non-corpus-word side
+      // cannot appear in the pair table — frequency 0 with no fetch.
+      // split_best_frequency probes EVERY split point of every query word
+      // and nearly all halves are non-words, so this turns the per-novel-
+      // query pair-frequency job into a driver-side hash probe.
+      val live = dfLocal.fold(misses)(m =>
+        misses.filter { case (l, r) => m.containsKey(l) && m.containsKey(r) })
+      val fetched: Map[(String, String), Long] =
+        if (live.isEmpty) Map.empty else fetchPairFrequencies(live)
+      misses.iterator.map(p => p -> fetched.getOrElse(p, 0L)).toMap
     }
-    val fetched: Map[(String, String), Long] =
-      if (misses.isEmpty) Map.empty else fetchPairFrequencies(misses)
-    misses.foreach(p => pairFreqCache.put(p, java.lang.Long.valueOf(fetched.getOrElse(p, 0L))))
-    hits.map(p => p -> pairFreqCache.get(p).longValue()).toMap ++
-      misses0.map(p => p -> fetched.getOrElse(p, 0L)).toMap
-  }
 
   private def fetchPairFrequencies(
       pairs: Seq[(String, String)]): Map[(String, String), Long] = {
@@ -738,27 +730,20 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * immutable per handle, so derivation lists are too; warm queries skip
     * the band scan + OSA DP entirely (the reference keeps its FST in
     * memory for the same reason — mod.rs:362-442). */
-  private val derivationCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Boolean, Int), Seq[(String, Int)]](256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Boolean, Int), Seq[(String, Int)]]): Boolean =
-          size() > 65536
-      })
+  private val derivationCache = new Lru[(String, Boolean, Int), Seq[(String, Int)]](65536, _ => 1)
 
-  def derivations(keys: Set[(String, Boolean, Int)]): Ranker.Derivations = {
-    val hits = scala.collection.mutable.HashMap.empty[(String, Boolean, Int), Seq[(String, Int)]]
-    keys.foreach { k =>
-      val v = derivationCache.get(k)
-      if (v != null) hits.update(k, v)
-    }
-    val uncached = keys.filterNot(hits.contains)
-    val computed = derivationsUncached(uncached)
-    uncached.foreach(k => derivationCache.put(k, computed.map.getOrElse(k, Nil)))
-    Ranker.Derivations(hits.toMap ++ computed.map, computed.exactFids)
-  }
+  /** Searchable-field ids of `exact_attributes`. */
+  private lazy val exactFids: Set[Int] = settings.exactAttributes
+    .flatMap(f => settings.searchableFields.zipWithIndex.toMap.get(f))
 
-  private def derivationsUncached(keys: Set[(String, Boolean, Int)]): Ranker.Derivations = {
+  def derivations(keys: Set[(String, Boolean, Int)]): Ranker.Derivations =
+    Ranker.Derivations(derivationCache.getAll(keys.toSeq) { misses =>
+      val computed = derivationsUncached(misses.toSet)
+      misses.iterator.map(k => k -> computed.getOrElse(k, Nil)).toMap
+    }, exactFids)
+
+  private def derivationsUncached(keys: Set[(String, Boolean, Int)])
+      : Map[(String, Boolean, Int), Seq[(String, Int)]] = {
     // Plain prefix EXTENSIONS are NEVER enumerated against the dictionary:
     // the read path resolves them with a parquet StartsWith predicate on
     // the word-sorted posting tables + per-doc startsWith
@@ -768,9 +753,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // Prefix keys with a typo budget enumerate ONLY their typo'd
     // derivations (extensions excluded below).
     val enumKeys = keys.filterNot { case (_, prefix, t) => prefix && t == 0 }
-    if (enumKeys.isEmpty) return Ranker.Derivations(Map.empty,
-      settings.exactAttributes
-        .flatMap(f => settings.searchableFields.zipWithIndex.toMap.get(f)))
+    if (enumKeys.isEmpty) return Map.empty
     val keySeq = enumKeys.toSeq
     // coarse prefilter: any key may match words within its length band
     def bandOk(len: Int): Boolean = keySeq.exists { case (w, prefix, t) =>
@@ -790,7 +773,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
             .as[(String, Boolean)].collect()
         else termDict.where(coarse).select($"word").as[String].collect().map((_, false))
     }
-    val map = keySeq.map { case key @ (w, prefix, t) =>
+    keySeq.map { case key @ (w, prefix, t) =>
       val ds = words.iterator.flatMap { case (cand, exactOnly) =>
         // plain extensions of a prefix key are served by the per-doc
         // startsWith path (Derivations.matching) — skip them here
@@ -803,9 +786,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       }.toVector.sortBy(_._1)
       key -> (ds: Seq[(String, Int)])
     }.toMap
-    val exactFids = settings.exactAttributes
-      .flatMap(f => settings.searchableFields.zipWithIndex.toMap.get(f))
-    Ranker.Derivations(map, exactFids)
   }
 
   // --------------------------------------------- bitmap candidate resolver
@@ -827,7 +807,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * source of truth). */
   private def bitmapRowsDirect(tableName: String, keys: Seq[String],
       keyCol: String): Option[Map[String, RoaringBitmap]] = {
-    if (!DirectParquet.enabled) return None
     val fts = footersFor(tableName, keyCol)
     val want = keys.toSet
     val out = Map.newBuilder[String, RoaringBitmap]
@@ -875,7 +854,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * keep the Spark scan: their word-column pages span whole row groups,
     * so a direct read would decode ~400k rows per touched group. */
   private[search] lazy val dwpDirectPaged: Boolean =
-    DirectParquet.enabled && new java.io.File(
+    new java.io.File(
       s"$dir/${T.DocWordPositions}", graft.index.TableIO.DwpPageMarker).exists()
 
   /** Page-row cap the committed forward index was actually WRITTEN under
@@ -890,7 +869,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
 
   /** Pair-table twin of [[dwpDirectPaged]]. */
   private[search] lazy val pairDirectPaged: Boolean =
-    DirectParquet.enabled && new java.io.File(
+    new java.io.File(
       s"$dir/${T.WordPairProximityDocids}",
       graft.index.TableIO.PairPageMarker).exists()
 
@@ -977,7 +956,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * cache's NUL-separated format. */
   private def directPairRows(lefts: Seq[String], rights: Seq[String],
       missSet: Set[String]): Option[Map[String, RoaringBitmap]] = {
-    if (!DirectParquet.enabled) return None
     val nul = 0.toChar
     val rightSet = rights.toSet
     val fts = footersFor(T.WordPairProximityDocids, "w1")
@@ -1027,9 +1005,9 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   private[search] def presentWords(words: Seq[String],
       docs: RoaringBitmap): Seq[String] = {
     if (words.isEmpty || docs.isEmpty) return Nil
-    val wd = bitmapCache.get("w", words)(ks =>
+    val wd = bitmaps("w", words)(ks =>
       bitmapRowsT(T.WordDocids, wordDocids, dictWords(ks)))
-    val ed = bitmapCache.get("e", words)(ks =>
+    val ed = bitmaps("e", words)(ks =>
       bitmapRowsT(T.ExactWordDocids, exactWordDocids, dictWords(ks)))
     words.filter { w =>
       wd.get(w).flatten.exists(RoaringBitmap.intersects(_, docs)) ||
@@ -1043,7 +1021,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * distributed aggregation) or the direct read fails. */
   private def directPrefixUnion(p: String,
       maxGroups: Int = 8): Option[RoaringBitmap] = {
-    if (!DirectParquet.enabled) return None
     val band = Seq(DirectParquet.prefixBand(p))
     val acc = new RoaringBitmap()
     val ok = Seq(T.WordDocids, T.ExactWordDocids).forall { t =>
@@ -1077,13 +1054,13 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     private val (fWd, fEwd, fPfx, fEpfx) = {
       import scala.concurrent.Future
       implicit val ec: scala.concurrent.ExecutionContext = GraftIndex.fetchEc
-      (Future(bitmapCache.get("w", allWords)(ks =>
+      (Future(bitmaps("w", allWords)(ks =>
          bitmapRowsT(T.WordDocids, wordDocids, dictWords(ks)))),
-       Future(bitmapCache.get("e", zeroWords)(ks =>
+       Future(bitmaps("e", zeroWords)(ks =>
          bitmapRowsT(T.ExactWordDocids, exactWordDocids, dictWords(ks)))),
-       Future(bitmapCache.get("p", prefixes)(ks =>
+       Future(bitmaps("p", prefixes)(ks =>
          bitmapRowsT(T.WordPrefixDocids, wordPrefixDocids, livePrefixes(ks), "prefix"))),
-       Future(bitmapCache.get("q", prefixes)(ks =>
+       Future(bitmaps("q", prefixes)(ks =>
          bitmapRowsT(T.ExactWordPrefixDocids, exactWordPrefixDocids,
            livePrefixes(ks), "prefix"))))
     }
@@ -1097,7 +1074,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     // dictionary-miss prefixes: one distributed range-union each (bounded
     // result: a single bitmap row reaches the driver), LRU-cached too
     val missingPfx: Map[String, Option[RoaringBitmap]] =
-      bitmapCache.get("r", prefixes.filter(p => pfx(p).isEmpty)) { ks0 =>
+      bitmaps("r", prefixes.filter(p => pfx(p).isEmpty)) { ks0 =>
         livePrefixes(ks0).map { p =>
           prefixExtensions(p) match {
             case Some(exts) =>
@@ -1105,10 +1082,10 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
               // union their (cached, batch-fetched) point bitmaps instead
               // of launching a ranged aggregation job
               val acc = new RoaringBitmap()
-              bitmapCache.get("w", exts)(ks =>
+              bitmaps("w", exts)(ks =>
                 bitmapRowsT(T.WordDocids, wordDocids, ks))
                 .valuesIterator.flatten.foreach(acc.or)
-              bitmapCache.get("e", exts)(ks =>
+              bitmaps("e", exts)(ks =>
                 bitmapRowsT(T.ExactWordDocids, exactWordDocids, ks))
                 .valuesIterator.flatten.foreach(acc.or)
               p -> acc
@@ -1208,7 +1185,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     val keys = pairs.distinct.flatMap { case (a, b) =>
       (1 to 7).map(p => s"$a\u0000$b\u0000$p")
     }
-    val got = bitmapCache.get("x", keys) { misses =>
+    val got = bitmaps("x", keys) { misses =>
       val parts = misses.map(_.split('\u0000'))
       // pinned-dictionary guard: a pair with a non-dictionary side has no
       // rows (ngram words like "w3w17" otherwise cost a cold scan)
@@ -1286,31 +1263,29 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         val pfxs = live.map(_._2).distinct
         val want = live.map(it => (it._1, it._2)).toSet
         // direct footer-pruned read (tables are prefix-sorted) first
-        val direct: Option[Seq[(String, RoaringBitmap)]] =
-          if (!DirectParquet.enabled) None
-          else {
-            val wordSet = words.toSet
-            val fts = footersFor(tblName, "prefix")
-            val out = Seq.newBuilder[(String, RoaringBitmap)]
-            // conjunctive page band over the words' span (same argument as
-            // directPairRows: wanted rows have wordCol ∈ wordSet ⊆ span;
-            // byte-ordered — see DirectParquet.spanBand)
-            val second = {
-              val (lo, hi) = DirectParquet.spanBand(words)
-              (wordCol, lo, hi)
-            }
-            val ok = DirectParquet.scanBands(fts,
-              DirectParquet.keyBands(pfxs), Some(second)) { g =>
-              val w = g.getString(wordCol, 0)
-              if (wordSet(w)) {
-                val p = g.getString("prefix", 0)
-                if (want((w, p)))
-                  out += yKey(w, p, sideTag, g.getInteger("prox", 0)) ->
-                    Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
-              }
-            }
-            if (ok) Some(out.result()) else None
+        val direct: Option[Seq[(String, RoaringBitmap)]] = {
+          val wordSet = words.toSet
+          val fts = footersFor(tblName, "prefix")
+          val out = Seq.newBuilder[(String, RoaringBitmap)]
+          // conjunctive page band over the words' span (same argument as
+          // directPairRows: wanted rows have wordCol ∈ wordSet ⊆ span;
+          // byte-ordered — see DirectParquet.spanBand)
+          val second = {
+            val (lo, hi) = DirectParquet.spanBand(words)
+            (wordCol, lo, hi)
           }
+          val ok = DirectParquet.scanBands(fts,
+            DirectParquet.keyBands(pfxs), Some(second)) { g =>
+            val w = g.getString(wordCol, 0)
+            if (wordSet(w)) {
+              val p = g.getString("prefix", 0)
+              if (want((w, p)))
+                out += yKey(w, p, sideTag, g.getInteger("prox", 0)) ->
+                  Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
+            }
+          }
+          if (ok) Some(out.result()) else None
+        }
         direct.map(_.iterator).getOrElse {
           tbl.where(col(wordCol).isin(words: _*) && col("prefix").isin(pfxs: _*))
             .select(col(wordCol), col("prefix"), col("prox"), col("docids"))
@@ -1346,7 +1321,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         val keys = servable.flatMap { case (w, p, r) =>
           (1 to 7).map(x => yKey(w, p, if (r) "r" else "l", x))
         }
-        val got = bitmapCache.get("y", keys)(_ => prefixPairPointRead(servable))
+        val got = bitmaps("y", keys)(_ => prefixPairPointRead(servable))
         servable.map { case it @ (w, p, r) =>
           val side = if (r) "r" else "l"
           it -> (1 to 7).flatMap(x =>
@@ -1374,7 +1349,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       prefixIsRight: Boolean): Map[Int, RoaringBitmap] = {
     val side = if (prefixIsRight) "r" else "l"
     val keys = (1 to 7).map(p => s"$word\u0000$prefix\u0000$side\u0000$p")
-    val got = bitmapCache.get("y", keys) { _ =>
+    val got = bitmaps("y", keys) { _ =>
       if (prefixPairDict.contains(prefix))
         prefixPairPointRead(Seq((word, prefix, prefixIsRight)))
       else prefixExtensions(prefix) match {
@@ -1412,7 +1387,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * own pages). None → caller runs the Spark aggregation. */
   private def directPrefixPairRanged(word: String, prefix: String,
       prefixIsRight: Boolean, side: String): Option[Map[String, RoaringBitmap]] = {
-    if (!DirectParquet.enabled) return None
     val fts = footersFor(T.WordPairProximityDocids, "w1")
     val (bands, second) =
       if (prefixIsRight) {
@@ -1474,14 +1448,10 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     new java.io.File(s"$dir/${T.WordPositionDocids}").exists() &&
       new java.io.File(s"$dir/${T.WordPrefixPositionDocids}").exists()
 
-  /** Per-key ascending (position → docids) rows, LRU'd on the handle.
-    * Values: the rows array, [[GraftIndex.PosTooBig]], or Absent (no rows). */
-  private val posRowsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, AnyRef](256, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, AnyRef]): Boolean =
-        size() > 4096
-    })
+  /** ("w", word) / ("p", prefix) → ascending (position → docids) rows, as
+    * [[positionRows]] returns them. */
+  private val posRowsCache =
+    new Lru[(String, String), Option[IndexedSeq[(Int, RoaringBitmap)]]](4096, _ => 1)
 
   /** Ascending `(position, docids)` rows of words (#10
     * `word_position_docids`) and prefixes (#12 `word_prefix_position_docids`)
@@ -1499,19 +1469,6 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     type Rows = IndexedSeq[(Int, RoaringBitmap)]
     if (!hasPositionTables)
       return (words.map(_ -> None).toMap, prefixes.map(_ -> None).toMap)
-    val keys = words.distinct.map("w:" + _) ++ prefixes.distinct.map("p:" + _)
-    val hits = scala.collection.mutable.HashMap.empty[String, Option[Rows]]
-    val missW = Vector.newBuilder[String]
-    val missP = Vector.newBuilder[String]
-    keys.foreach { k =>
-      posRowsCache.get(k) match {
-        case null =>
-          if (k.startsWith("w:")) missW += k.drop(2) else missP += k.drop(2)
-        case GraftIndex.PosTooBig => hits.update(k, None)
-        case GraftIndex.PosAbsent => hits.update(k, Some(IndexedSeq.empty))
-        case rows                 => hits.update(k, Some(rows.asInstanceOf[Rows]))
-      }
-    }
     def fetch(misses: Seq[String], tableName: String, df: => DataFrame,
         keyCol: String, live: Seq[String] => Seq[String],
         tag: String): Map[String, Option[Rows]] = {
@@ -1527,7 +1484,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         DirectParquet.bandGroupCount(fts,
           DirectParquet.keyBands(Seq(k))) <= GraftIndex.PosMaxGroupsPerKey)
       val okSet = ok.toSet
-      val fetched: Boolean = ok.isEmpty || {
+      val direct = ok.isEmpty ||
         Search.traced(s"pos-fetch($tag=${ok.length})")(
           DirectParquet.scanBands(fts, DirectParquet.keyBands(ok)) { g =>
             val k = g.getString(keyCol, 0)
@@ -1537,8 +1494,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
                 ((g.getInteger("position", 0),
                   Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)))
           })
-      } || {
-        // Spark fallback (direct reader off / failed): same rows, one scan
+      if (!direct) {
+        // Spark fallback (direct read failed): same rows, one scan
         out.clear()
         df.where(col(keyCol).isin(ok: _*))
           .select(col(keyCol), col("position"), col("docids"))
@@ -1548,37 +1505,29 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
               scala.collection.mutable.ArrayBuffer.empty) +=
               ((p, Bitmaps.cboDeserialize(b)))
           }
-        true
       }
-      if (!fetched) Map.empty // unreachable (fallback always true) — safety
-      else {
-        val res = Map.newBuilder[String, Option[Rows]]
-        misses.foreach { k =>
-          val v: (AnyRef, Option[Rows]) =
-            if (!alive.contains(k)) (GraftIndex.PosAbsent, Some(IndexedSeq.empty))
-            else if (big.contains(k)) (GraftIndex.PosTooBig, None)
-            else out.get(k) match {
-              case Some(rows) if rows.length > GraftIndex.PosMaxRowsPerKey =>
-                (GraftIndex.PosTooBig, None)
-              case Some(rows) =>
-                val sorted: Rows = rows.sortBy(_._1).toIndexedSeq
-                (sorted, Some(sorted))
-              case None => (GraftIndex.PosAbsent, Some(IndexedSeq.empty))
-            }
-          posRowsCache.put(s"${tag.charAt(0)}:$k", v._1)
-          res += k -> v._2
-        }
-        res.result()
-      }
+      misses.iterator.map { k =>
+        k -> (
+          if (!alive.contains(k)) Some(IndexedSeq.empty)
+          else if (big.contains(k)) None
+          else out.get(k) match {
+            case Some(rows) if rows.length > GraftIndex.PosMaxRowsPerKey => None
+            case Some(rows) => Some(rows.sortBy(_._1).toIndexedSeq)
+            case None => Some(IndexedSeq.empty)
+          })
+      }.toMap
     }
-    val fw = fetch(missW.result(), T.WordPositionDocids, wordPositionDocids,
-      "word", dictWords, "words")
-    val fp = fetch(missP.result(), T.WordPrefixPositionDocids,
-      wordPrefixPositionDocids, "prefix", livePrefixes, "prefixes")
-    val all = hits ++ fw.map { case (k, v) => ("w:" + k, v) } ++
-      fp.map { case (k, v) => ("p:" + k, v) }
-    (words.distinct.map(w => w -> all.getOrElse("w:" + w, None)).toMap,
-      prefixes.distinct.map(p => p -> all.getOrElse("p:" + p, None)).toMap)
+    val all = posRowsCache.getAll(
+        words.map(("w", _)) ++ prefixes.map(("p", _))) { misses =>
+      val fw = fetch(misses.collect { case ("w", w) => w }, T.WordPositionDocids,
+        wordPositionDocids, "word", dictWords, "words")
+      val fp = fetch(misses.collect { case ("p", p) => p },
+        T.WordPrefixPositionDocids, wordPrefixPositionDocids, "prefix",
+        livePrefixes, "prefixes")
+      fw.map { case (k, v) => ("w", k) -> v } ++ fp.map { case (k, v) => ("p", k) -> v }
+    }
+    (words.distinct.map(w => w -> all.getOrElse(("w", w), None)).toMap,
+      prefixes.distinct.map(p => p -> all.getOrElse(("p", p), None)).toMap)
   }
 
   /** word → (tolerant ∪ exact) candidate bitmap (empty when absent) — a
@@ -1587,9 +1536,9 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
   private[search] def wordPresenceBitmaps(words: Seq[String])
       : Map[String, RoaringBitmap] = {
     if (words.isEmpty) return Map.empty
-    val wd = bitmapCache.get("w", words)(ks =>
+    val wd = bitmaps("w", words)(ks =>
       bitmapRowsT(T.WordDocids, wordDocids, dictWords(ks)))
-    val ed = bitmapCache.get("e", words)(ks =>
+    val ed = bitmaps("e", words)(ks =>
       bitmapRowsT(T.ExactWordDocids, exactWordDocids, dictWords(ks)))
     words.distinct.map { w =>
       val acc = new RoaringBitmap()
@@ -1620,7 +1569,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     if (fids.isEmpty ||
         !new java.io.File(s"$dir/${T.FidWordCountDocids}").exists()) return
     val keys = for (f <- fids; n <- 1 to 10) yield s"$f $n"
-    bitmapCache.get("f", keys) { misses =>
+    bitmaps("f", keys) { misses =>
       val missSet = misses.toSet
       fidWordCountDocids.where($"fid".isin(fids: _*))
         .select($"fid", $"word_count", $"docids").as[(Int, Int, Array[Byte])]
@@ -1639,7 +1588,7 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       : Map[Int, Option[RoaringBitmap]] = {
     if (fids.isEmpty) return Map.empty
     val keys = fids.distinct.map(f => s"$f $n")
-    val got = bitmapCache.get("f", keys) { misses =>
+    val got = bitmaps("f", keys) { misses =>
       val missFids = misses.map(_.split(' ')(0).toInt)
       fidWordCountDocids
         .where($"fid".isin(missFids: _*) && $"word_count" === n)
@@ -1691,12 +1640,10 @@ object GraftIndex {
     * a var so specs can force the unpinnable (level-tree walk) path. */
   private[search] var MaxSortPinRows: Int = 2000000
 
-  /** Position-row (#10/#12) point-read sentinels + caps: a key whose rows
-    * span more row groups (or decode to more rows) than these is refused —
-    * callers skip set-based refinement for that group and keep the per-doc
-    * path. Caps bound one fetch to a few MB of decode. */
-  private[search] object PosTooBig
-  private[search] object PosAbsent
+  /** Position-row (#10/#12) point-read caps: a key whose rows span more
+    * row groups (or decode to more rows) than these is refused — callers
+    * skip set-based refinement for that group and keep the per-doc path.
+    * Caps bound one fetch to a few MB of decode. */
   private[search] var PosMaxGroupsPerKey: Int = 4
   private[search] var PosMaxRowsPerKey: Int = 32768
 
@@ -1705,9 +1652,7 @@ object GraftIndex {
     * crossover: the pool decodes ~1.5M rows/s (412k-row fetch ≈ 285 ms
     * vs the same Spark scan's 646 ms), so up to ~1M rows the direct read
     * wins; beyond it the fully-parallel scan does. */
-  private[search] var DwpDirectMaxRows: Long = // var: specs clamp the gate
-    sys.env.get("SPARK_GRAFT_DWP_DIRECT_MAX_ROWS").map(_.toLong)
-      .getOrElse(1L << 20)
+  private[search] var DwpDirectMaxRows: Long = 1L << 20 // var: specs clamp the gate
 
   /** Test hook: run `f` with the direct-read volume gate clamped, restore
     * guaranteed — specs must use this instead of assigning the var (a
@@ -1724,8 +1669,7 @@ object GraftIndex {
     * (the column-index In evaluation is O(pages × log points) per touched
     * group — cheap for a drain page's ~20–60 docs, not for a 8k-doc
     * verification slice). */
-  private[search] val DwpDocPointsMax: Int =
-    sys.env.get("SPARK_GRAFT_DWP_DOC_POINTS_MAX").map(_.toInt).getOrElse(256)
+  private[search] val DwpDocPointsMax: Int = 256
 
   /** Driver-pinned per-field sort values: min/max numeric value and min/max
     * string norm per docid (keep-first facet-sort semantics: asc reads the

@@ -22,40 +22,14 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
   def budgetBytes: Long = maxBytes
 
   /** word → postings sorted by docid: (docid, tf). */
-  private val lru = new java.util.LinkedHashMap[String, Array[Long]](256, 0.75f, true)
-  private var bytes = 0L
-
-  @inline private def entryBytes(a: Array[Long]): Long = 64L + 8L * a.length
-
-  private def evict(): Unit = {
-    val it = lru.entrySet().iterator()
-    while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      bytes -= entryBytes(e.getValue)
-      it.remove()
-    }
-  }
+  private val lru = new Lru[String, Array[Long]](maxBytes, a => 64L + 8L * a.length)
 
   /** Fetch-through: postings of every word, as (docid, tf) pairs packed in a
     * long (docid high, tf low) so the hot array is primitive. Misses are
-    * fetched in ONE pruned posting-block scan; absent words cache empty.
-    *
-    * The distributed fetch runs OUTSIDE the lock: one cold miss must not
-    * serialize every concurrent serving client behind a Spark job (two
-    * threads racing on the same word both fetch; the second install is
-    * dropped — standard fetch-through tolerance). */
-  def get(words: Seq[String]): Map[String, Array[Long]] = {
-    val distinct = words.distinct
-    val (hits, missing) = synchronized {
-      val h = Map.newBuilder[String, Array[Long]]
-      val m = Vector.newBuilder[String]
-      distinct.foreach { w =>
-        val v = lru.get(w) // refreshes LRU recency
-        if (v != null) h += (w -> v) else m += w
-      }
-      (h.result(), m.result())
-    }
-    if (missing.isEmpty) return hits
+    * fetched in ONE pruned posting-block scan; absent words cache empty. */
+  def get(words: Seq[String]): Map[String, Array[Long]] = lru.getAll(words)(fetch)
+
+  private def fetch(missing: Seq[String]): Map[String, Array[Long]] = {
     // pinned-dictionary guard: non-dictionary terms have no blocks — cache
     // them empty without a scan
     val live = index.dictWords(missing)
@@ -66,7 +40,7 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
         .select(col("word"), col("block_id"), col("bytes"))
         .as[(String, Int, Array[Byte])].collect()
     val byWord = rows.groupBy(_._1)
-    val fetched: Map[String, Array[Long]] = missing.iterator.map { w =>
+    missing.iterator.map { w =>
       val ps: Array[Long] = byWord.get(w) match {
         case None => Array.empty[Long]
         case Some(blocks) =>
@@ -76,99 +50,17 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
       }
       w -> ps
     }.toMap
-    synchronized {
-      fetched.foreach { case (w, ps) =>
-        if (!lru.containsKey(w)) { lru.put(w, ps); bytes += entryBytes(ps) }
-      }
-      evict()
-      // values captured before evict() could run, so an over-budget batch
-      // (or a concurrent eviction) can't null out the caller's view
-      hits ++ fetched
-    }
   }
 
   @inline def docidOf(packed: Long): Int = (packed >>> 32).toInt
   @inline def tfOf(packed: Long): Int = packed.toInt
 }
 
-/** Driver-side LRU cache of candidate bitmaps keyed by `<ns>:<key>` —
-  * `word_docids` / `exact_word_docids` / `word_prefix_docids` /
-  * `exact_word_prefix_docids` point reads (ns `w`/`e`/`p`/`q`) plus
-  * dictionary-miss prefix range unions (ns `r`). PRESENCE-AWARE: a key
-  * absent from its table caches as Absent so `resolveTreeBitmap` can still
-  * distinguish "prefix not in the prefix dict" (→ range-union fallback)
-  * from "not fetched yet". Warm no-rank/count queries and the bitmap-
-  * bucketed rank pass run zero Spark jobs (the reference's equivalent reads
-  * hit LMDB in-process, `milli/src/search/mod.rs:136-242`). */
-final class BitmapCache(maxBytes: Long = 128L << 20) {
-  import org.roaringbitmap.RoaringBitmap
-
-  private object Absent
-  private val lru = new java.util.LinkedHashMap[String, AnyRef](256, 0.75f, true)
-  private var bytes = 0L
-
-  @inline private def entryBytes(v: AnyRef): Long = v match {
-    case bm: RoaringBitmap => 64L + bm.getSizeInBytes
-    case _                 => 64L
-  }
-
-  private def evict(): Unit = {
-    val it = lru.entrySet().iterator()
-    while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      bytes -= entryBytes(e.getValue)
-      it.remove()
-    }
-  }
-
-  /** Fetch-through lookup: `fetch` is called ONCE with the uncached keys and
-    * returns bitmaps for those present in the table; the rest cache as
-    * Absent. Result maps every requested key to Some(bitmap) | None(absent).
-    * Returned bitmaps are SHARED — callers must not mutate them.
-    *
-    * `fetch` (a distributed job on a cold miss) runs OUTSIDE the lock so one
-    * cold query never serializes concurrent serving clients; racing threads
-    * may fetch the same key twice and the second install is dropped. */
-  def get(ns: String, keys: Seq[String])(
-      fetch: Seq[String] => Map[String, RoaringBitmap]): Map[String, Option[RoaringBitmap]] = {
-    val distinct = keys.distinct
-    val (hits, missing) = synchronized {
-      val h = Map.newBuilder[String, Option[RoaringBitmap]]
-      val m = Vector.newBuilder[String]
-      distinct.foreach { k =>
-        lru.get(ns + ":" + k) match { // refreshes LRU recency
-          case null              => m += k
-          case bm: RoaringBitmap => h += (k -> Some(bm))
-          case _                 => h += (k -> None)
-        }
-      }
-      (h.result(), m.result())
-    }
-    if (missing.isEmpty) return hits
-    val fetched = fetch(missing)
-    synchronized {
-      missing.foreach { k =>
-        if (!lru.containsKey(ns + ":" + k)) {
-          val v: AnyRef = fetched.get(k) match {
-            case Some(bm) => bm
-            case None     => Absent
-          }
-          lru.put(ns + ":" + k, v)
-          bytes += entryBytes(v)
-        }
-      }
-      evict()
-      // values captured before evict(): the caller's view can't be nulled
-      hits ++ missing.map(k => k -> fetched.get(k))
-    }
-  }
-}
-
 /** Driver-side LRU cache of forward-index rows (docid, word, positions) for
-  * the small-query rank path, keyed by exact word (`w:foo`) or prefix range
-  * (`p:fo`) — the serving twin of the pruned `doc_word_positions` scans.
-  * Byte-budgeted like [[PostingCache]]; misses cost one pruned scan for the
-  * whole miss batch. */
+  * the small-query rank path, keyed by exact word (`("w", foo)`) or prefix
+  * range (`("p", fo)`) — the serving twin of the pruned
+  * `doc_word_positions` scans. Byte-budgeted like [[PostingCache]]; misses
+  * cost one pruned scan for the whole miss batch. */
 final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
   import index.spark
   import spark.implicits._
@@ -178,41 +70,23 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
   /** byte budget (prewarm sizes its head against it). */
   def budgetBytes: Long = maxBytes
 
-  private val lru =
-    new java.util.LinkedHashMap[String, Array[(Int, String, Array[Int])]](64, 0.75f, true)
-  private var bytes = 0L
+  /** ("w", word) / ("p", prefix) → rows. */
+  private val lru = new Lru[(String, String), Rows](maxBytes,
+    a => 64L + a.iterator.map(r => 48L + 2L * r._2.length + 4L * r._3.length).sum)
 
-  private def entryBytes(a: Array[(Int, String, Array[Int])]): Long =
-    64L + a.iterator.map(r => 48L + 2L * r._2.length + 4L * r._3.length).sum
+  private def keys(words: Seq[String], prefixes: Seq[String]): Seq[(String, String)] =
+    words.map(("w", _)) ++ prefixes.map(("p", _))
 
-  private def evict(): Unit = {
-    val it = lru.entrySet().iterator()
-    while (bytes > maxBytes && it.hasNext) {
-      val e = it.next()
-      bytes -= entryBytes(e.getValue)
-      it.remove()
-    }
+  private def byNs(got: Map[(String, String), Rows]): (Map[String, Rows], Map[String, Rows]) =
+    (got.collect { case (("w", w), a) => w -> a }, got.collect { case (("p", p), a) => p -> a })
+
+  /** Cached rows only (refreshing them) and the words / prefixes that miss. */
+  private def splitHits(words: Seq[String], prefixes: Seq[String])
+      : (Map[String, Rows], Map[String, Rows], Seq[String], Seq[String]) = {
+    val (hitW, hitP) = byNs(lru.getAll(keys(words, prefixes))(_ => Map.empty))
+    (hitW, hitP, words.distinct.filterNot(hitW.contains),
+      prefixes.distinct.filterNot(hitP.contains))
   }
-
-  /** Rows for every exact word and every prefix, fetched through one pruned
-    * scan per miss batch. Values are docid-sorted (binary-searchable).
-    * The scan runs OUTSIDE the lock (cold misses must not serialize
-    * concurrent serving clients; duplicate racing fetches tolerated). */
-  private def splitHits(dw: Seq[String], dp: Seq[String])
-      : (Map[String, Rows], Map[String, Rows], Seq[String], Seq[String]) =
-    synchronized {
-      val hw = Map.newBuilder[String, Rows]
-      val hp = Map.newBuilder[String, Rows]
-      val mw = Vector.newBuilder[String]
-      val mp = Vector.newBuilder[String]
-      dw.foreach { w =>
-        val v = lru.get("w:" + w); if (v != null) hw += (w -> v) else mw += w
-      }
-      dp.foreach { p =>
-        val v = lru.get("p:" + p); if (v != null) hp += (p -> v) else mp += p
-      }
-      (hw.result(), hp.result(), mw.result(), mp.result())
-    }
 
   /** One pruned scan for a miss batch. Pinned-dictionary guard: novel
     * ngram/typo'd words and dead prefixes have no forward rows — they
@@ -291,26 +165,23 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
     (fetchedW, fetchedP)
   }
 
+  /** Rows for every exact word and every prefix, fetched through one pruned
+    * scan per miss batch. Values are docid-sorted (binary-searchable). */
   def get(words: Seq[String], prefixes: Seq[String],
       allowDirect: Boolean = true)
       : (Map[String, Rows], Map[String, Rows]) = {
-    val (hitW, hitP, missW, missP) = splitHits(words.distinct, prefixes.distinct)
-    if (missW.isEmpty && missP.isEmpty) return (hitW, hitP)
-    val rows = scanRows(missW, missP, None, allowDirect)
-    val (fetchedW, fetchedP) = groupFetched(rows, missW, missP)
-    val out = synchronized {
-      (fetchedW.iterator.map { case (w, a) => ("w:" + w, a) } ++
-        fetchedP.iterator.map { case (p, a) => ("p:" + p, a) }).foreach {
-        case (k, a) =>
-          if (!lru.containsKey(k)) { lru.put(k, a); bytes += entryBytes(a) }
-      }
-      evict()
-      (hitW ++ fetchedW, hitP ++ fetchedP)
+    var fetched = false
+    val got = lru.getAll(keys(words, prefixes)) { misses =>
+      fetched = true
+      val missW = misses.collect { case ("w", w) => w }
+      val missP = misses.collect { case ("p", p) => p }
+      val (fw, fp) = groupFetched(scanRows(missW, missP, None, allowDirect), missW, missP)
+      fw.map { case (w, a) => ("w", w) -> a } ++ fp.map { case (p, a) => ("p", p) -> a }
     }
     // complete entries just landed: drop the restricted-fetch memo so the
     // next getForDocs sees the (fuller) LRU instead of the stale slice
-    rMemo = null
-    out
+    if (fetched) rMemo = null
+    byNs(got)
   }
 
   /** Keys whose complete fill is in flight on the background filler. */
@@ -349,7 +220,7 @@ final class DwpCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
     if (memo != null && memo.words == words && memo.prefixes == prefixes &&
         java.util.Arrays.equals(memo.docids, docids))
       return memo.result
-    val (hitW, hitP, missW, missP) = splitHits(words.distinct, prefixes.distinct)
+    val (hitW, hitP, missW, missP) = splitHits(words, prefixes)
     if (missW.isEmpty && missP.isEmpty) return (hitW, hitP)
     if (docids.isEmpty) // nothing to rank: misses contribute no rows
       return (hitW ++ missW.map(_ -> Array.empty[(Int, String, Array[Int])]),
@@ -444,7 +315,5 @@ object PostingCache {
   /** Max time a background complete fill waits for in-flight queries to
     * drain before running anyway (see the filler task in
     * [[DwpCache.getForDocs]]). */
-  val FillDeferMaxNs: Long =
-    sys.env.get("SPARK_GRAFT_FILL_DEFER_MS").map(_.toLong)
-      .getOrElse(2000L) * 1000000L
+  val FillDeferMaxNs: Long = 2000L * 1000000L
 }

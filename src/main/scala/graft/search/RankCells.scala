@@ -588,9 +588,8 @@ object RankCells {
 
   /** Cell-refinement engagement floor: a (typo, prox)-labeled cell below
     * this many docs ranks per-doc (measured cheaper than strata algebra).
-    * Var for specs; env override for measurement A/Bs. */
-  private[search] var RefineMinDocs: Long =
-    sys.env.get("SPARK_GRAFT_REFINE_MIN_DOCS").map(_.toLong).getOrElse(4096L)
+    * Var for specs. */
+  private[search] var RefineMinDocs: Long = 4096L
 
   /** Strata-per-group cap: a group whose material spreads over more
     * distinct first positions than this refuses refinement (bounded
@@ -606,8 +605,7 @@ object RankCells {
     * Wide-material cells refuse refinement UNLESS the cell exceeds the
     * remaining drain budget (`forced`), where refinement is the only
     * alternative to a distributed abort. */
-  private[search] var AttrCheapMaterialWords: Int =
-    sys.env.get("SPARK_GRAFT_ATTR_CHEAP_WORDS").map(_.toInt).getOrElse(64)
+  private[search] var AttrCheapMaterialWords: Int = 64 // var: specs clamp it
 
   /** Enumerated-extension cap for non-dict prefixes in a group. */
   private val AttrMaxMaterialWords = 256
@@ -677,13 +675,14 @@ object RankCells {
     // how wide the material) — labels re-copy from THIS cell, since the
     // memoized entry may have been built under different (typo, prox)
     val memoKey: AnyRef = (branchMats, cell.docs)
-    val hit = index.attrStrataMemo.get(memoKey)
-    if (hit != null) {
-      index.attrStrataMemoHits.incrementAndGet()
-      attrDrains.incrementAndGet()
-      return Some(hit.iterator.map { case (a, d, nr) =>
-        cell.copy(docs = d, attr = a, noRefine = nr)
-      })
+    index.attrStrataMemo.get(memoKey) match {
+      case Some(hit) =>
+        index.attrStrataMemoHits.incrementAndGet()
+        attrDrains.incrementAndGet()
+        return Some(hit.iterator.map { case (a, d, nr) =>
+          cell.copy(docs = d, attr = a, noRefine = nr)
+        })
+      case None => ()
     }
     val allWords = branchMats.flatMap(_.flatMap(_._1)).distinct
     val allPfx = branchMats.flatMap(_.flatMap(_._2)).distinct

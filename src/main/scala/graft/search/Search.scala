@@ -98,9 +98,8 @@ object Search {
     * ~14 MB and passes untouched; a position-heavy stop word whose rows
     * average hundreds of positions is priced by its BYTES, not its row
     * count — the cleaner long-term shape of the serve gate (round-4
-    * notes). Overridable per process for bench experiments. */
-  val MaxLocalBytes: Long =
-    sys.env.get("SPARK_GRAFT_MAX_LOCAL_BYTES").map(_.toLong).getOrElse(64L << 20)
+    * notes). */
+  val MaxLocalBytes: Long = 64L << 20
 
   /** Drain cap for the cell-path admission that BYPASSES the volume gate
     * (Words-led phrase-free queries): at most this many docs may rank
@@ -108,8 +107,7 @@ object Search {
     * what the parallel per-doc ranker clears in tens of ms (the 63.7k-doc
     * worst rung ranks in ~15 ms); the docid-restricted forward fetch
     * collects ≤ words × cap rows — bounded at any corpus size. */
-  val MaxLocalDrain: Long =
-    sys.env.get("SPARK_GRAFT_MAX_LOCAL_DRAIN").map(_.toLong).getOrElse(1L << 17)
+  val MaxLocalDrain: Long = 1L << 17
 
   /** SPARK_GRAFT_TRACE=1 prints local-path stage timings to stderr. */
   private[search] val trace: Boolean =

@@ -15,7 +15,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   private lazy val index = Fixture.buildIndex(TestSpark.spark)
 
   test("direct point reads engage and fall back zero times on fixture queries") {
-    assume(DirectParquet.enabled)
     val before = DirectParquet.reads.get()
     val fbBefore = DirectParquet.fallbacks.get()
     val search = new Search(index)
@@ -31,7 +30,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("point reads hit groups beyond a pruned leading row group") {
-    assume(DirectParquet.enabled)
     // A key-sorted file with MANY row groups, point-read on keys whose
     // groups sit in the middle/end of the file: parquet-mr filters the
     // reader's block list at open (stats/dictionary row-group filtering),
@@ -77,7 +75,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("rank results identical with direct reads vs a fresh Spark-only handle") {
-    assume(DirectParquet.enabled)
     // fresh handles so both sides fetch cold through their own route:
     // `direct` uses the point reader, `sparkOnly` has it disabled via a
     // poisoned footer dir (nonexistent table names can't be faked, so we
@@ -115,7 +112,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("broad-prefix prox rows resolve via the direct ranged read, zero Spark aggregations") {
-    assume(DirectParquet.enabled)
     val spark = TestSpark.spark
     import spark.implicits._
     // a length-3 prefix with 80 dictionary extensions: too long for the
@@ -175,7 +171,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("docid point set prunes a fat word run to the wanted pages") {
-    assume(DirectParquet.enabled)
     // dwp-shaped table: ONE word whose run spans ~20 fine pages; a
     // restricted read of 2 scattered docids must decode ~2 pages, not the
     // run. intPoints is page-prune-only: the callback re-checks docids.
@@ -207,7 +202,6 @@ class DirectReadSpec extends AnyFunSuite with Matchers {
   }
 
   test("docid points keep frequent-word restricted fetches direct past the volume gate") {
-    assume(DirectParquet.enabled)
     val spark = TestSpark.spark
     val stg = graft.index.IndexSettings(searchableFields = Seq("text"))
     val dir = graft.TestSpark.tempDir("direct-docpoints-idx")

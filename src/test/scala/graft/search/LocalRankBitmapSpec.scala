@@ -12,7 +12,7 @@ import graft.webgen.WebPages
   * (pass 1) with per-branch bitmap algebra off the cached word/prefix
   * docids tables — this spec pins it rank-identical to the forced
   * distributed path across criteria, typos, prefixes, filters and phrase
-  * fallback, and pins the BitmapCache's presence-aware fetch-once
+  * fallback, and pins the bitmap cache's presence-aware fetch-once
   * semantics. */
 class LocalRankBitmapSpec extends AnyFunSuite with Matchers {
 
@@ -93,23 +93,23 @@ class LocalRankBitmapSpec extends AnyFunSuite with Matchers {
   }
 
   test("bitmap cache is presence-aware and fetches each key once") {
-    val cache = new BitmapCache()
+    val fresh = GraftIndex(spark, dir, stg) // a new handle starts with empty caches
     var calls = 0
     def fetch(keys: Seq[String]): Map[String, RoaringBitmap] = {
       calls += 1
       keys.filter(_.startsWith("hit")).map(k => k -> RoaringBitmap.bitmapOf(1, 2)).toMap
     }
-    val r1 = cache.get("w", Seq("hit1", "miss1"))(fetch)
+    val r1 = fresh.bitmaps("w", Seq("hit1", "miss1"))(fetch)
     r1("hit1").map(_.getCardinality) shouldBe Some(2)
     r1("miss1") shouldBe None
     calls shouldBe 1
     // second lookup: both keys (present AND absent) served from cache
-    val r2 = cache.get("w", Seq("hit1", "miss1"))(fetch)
+    val r2 = fresh.bitmaps("w", Seq("hit1", "miss1"))(fetch)
     r2("hit1").isDefined shouldBe true
     r2("miss1") shouldBe None
     calls shouldBe 1
     // different namespace refetches
-    cache.get("p", Seq("hit1"))(fetch)
+    fresh.bitmaps("p", Seq("hit1"))(fetch)
     calls shouldBe 2
   }
 
