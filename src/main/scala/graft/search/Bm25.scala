@@ -201,7 +201,8 @@ class Bm25(index: GraftIndex, k1: Double = 1.2, b: Double = 0.75,
   }
 
   /** Small-query path: postings through the word-keyed LRU cache (zero jobs
-    * when warm, one pruned scan per cold miss batch), scored in-process
+    * warm or cold: a cold miss batch is one direct parquet point read, with
+    * a pruned Spark scan as fallback), scored in-process
     * against the pinned doclen array. Returns None on a doclen miss (sparse
     * docid not in the pinned array) — the caller then rescores distributed. */
   private def topKLocal(terms: Seq[String], idfs: Map[String, Double],

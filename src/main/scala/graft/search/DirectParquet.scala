@@ -129,6 +129,19 @@ object DirectParquet {
       }.toSeq
   }
 
+  /** The footer index of `dir`, or None when a footer cannot be read (a
+    * missing or corrupt file) — counted as a fallback like a failed
+    * [[scanBands]]; the caller takes its Spark scan. */
+  def openFooters(dir: String, keyCol: String): Option[TableFooters] =
+    try Some(new TableFooters(dir, keyCol))
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        fallbacks.incrementAndGet()
+        System.err.println(s"graft: parquet footers of $dir unreadable, " +
+          s"falling back to Spark scan: $e")
+        None
+    }
+
   /** Number of row groups a band set would read (callers cap ranged
     * direct reads and keep the distributed aggregation beyond it). */
   def bandGroupCount(footers: TableFooters,

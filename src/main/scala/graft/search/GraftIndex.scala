@@ -127,7 +127,8 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         T.DocWordPositions -> "word", T.WordPairProximityDocids -> "w1",
         T.WordPrefixPairProximityDocids -> "prefix",
         T.PrefixWordPairProximityDocids -> "prefix",
-        T.WordPositionDocids -> "word", T.WordPrefixPositionDocids -> "prefix")
+        T.WordPositionDocids -> "word", T.WordPrefixPositionDocids -> "prefix",
+        T.PostingBlocks -> "word")
       val fs = tables.filter(t => new java.io.File(s"$dir/${t._1}").exists())
         .map { case (t, k) => Future(footersFor(t, k)) }
       fs.foreach(f =>
@@ -797,34 +798,51 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * handles before a swapped table could be read). */
   private val footerCache = scala.collection.concurrent.TrieMap
     .empty[String, DirectParquet.TableFooters]
+  /** None when the table's footers cannot be read (a missing or corrupt
+    * file): counted as a direct-read fallback and NOT cached (the next
+    * fetch retries), and the caller takes its Spark scan. */
   private def footersFor(tableName: String, keyCol: String)
-      : DirectParquet.TableFooters =
-    footerCache.getOrElseUpdate(tableName,
-      new DirectParquet.TableFooters(s"$dir/$tableName", keyCol))
+      : Option[DirectParquet.TableFooters] =
+    footerCache.get(tableName).orElse(
+      DirectParquet.openFooters(s"$dir/$tableName", keyCol)
+        .map(fts => footerCache.putIfAbsent(tableName, fts).getOrElse(fts)))
 
-  /** Direct (key → docids bitmap) point read off a key-sorted bitmap table
-    * — zero Spark jobs. None → caller runs the Spark scan (fallback AND
-    * source of truth). */
-  private def bitmapRowsDirect(tableName: String, keys: Seq[String],
-      keyCol: String): Option[Map[String, RoaringBitmap]] = {
-    val fts = footersFor(tableName, keyCol)
-    val want = keys.toSet
-    val out = Map.newBuilder[String, RoaringBitmap]
-    val ok = DirectParquet.scanBands(fts, DirectParquet.keyBands(keys)) { g =>
-      val k = g.getString(keyCol, 0)
-      if (want(k))
-        out += k -> Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
+  /** Direct footer-pruned point read off a key-sorted table: `row` of every
+    * row whose `keyCol` is in `keys` — zero Spark jobs. None → caller runs
+    * the Spark scan (fallback AND source of truth). */
+  private def directKeyRows[A: scala.reflect.ClassTag](tableName: String,
+      keyCol: String, keys: Seq[String])(
+      row: org.apache.parquet.example.data.Group => A): Option[Array[A]] =
+    footersFor(tableName, keyCol).flatMap { fts =>
+      val want = keys.toSet
+      val out = Array.newBuilder[A]
+      val ok = DirectParquet.scanBands(fts, DirectParquet.keyBands(keys)) { g =>
+        // surviving pages carry neighbouring rows — re-check the key
+        if (want(g.getString(keyCol, 0))) out += row(g)
+      }
+      if (ok) Some(out.result()) else None
     }
-    if (ok) Some(out.result()) else None
-  }
+
+  /** Direct posting-block point read: the (word, block_id, bytes) rows of
+    * `words` (non-empty) — the BM25 small-query path's cold
+    * [[PostingCache]] misses. No volume gate: the small-query gate already
+    * bounds a query's miss batch (≤ 2^18 postings), and the prewarm
+    * fetches ≤ 512 words at a time. */
+  private[search] def postingBlocksDirect(words: Seq[String])
+      : Option[Array[(String, Int, Array[Byte])]] =
+    directKeyRows(T.PostingBlocks, "word", words) { g =>
+      (g.getString("word", 0), g.getInteger("block_id", 0),
+        g.getBinary("bytes", 0).getBytes)
+    }
 
   /** One (key → bitmap) batch read off a bitmap-valued posting table:
     * direct footer-pruned row-group read first, Spark scan on fallback. */
   private def bitmapRowsT(tableName: String, df: => DataFrame, keys: Seq[String],
       keyCol: String = "word"): Map[String, RoaringBitmap] =
     if (keys.isEmpty) Map.empty
-    else bitmapRowsDirect(tableName, keys, keyCol)
-      .getOrElse(bitmapRows(df, keys, keyCol))
+    else directKeyRows(tableName, keyCol, keys) { g =>
+      g.getString(keyCol, 0) -> Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
+    }.map(_.toMap).getOrElse(bitmapRows(df, keys, keyCol))
 
   /** One (key → bitmap) batch read off a bitmap-valued posting table. */
   private def bitmapRows(df: DataFrame, keys: Seq[String],
@@ -916,7 +934,10 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     val bands = DirectParquet.keyBands(words) ++
       prefixes.map(DirectParquet.prefixBand)
     if (bands.isEmpty) return Some(Array.empty)
-    val fts = footersFor(T.DocWordPositions, "word")
+    val fts = footersFor(T.DocWordPositions, "word") match {
+      case Some(f) => f
+      case None => return None
+    }
     // ≤ ~2 groups per band on the range-partitioned sort; a band set
     // overlapping far more means very broad prefixes — keep Spark's
     // fully-parallel scan
@@ -958,7 +979,10 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       missSet: Set[String]): Option[Map[String, RoaringBitmap]] = {
     val nul = 0.toChar
     val rightSet = rights.toSet
-    val fts = footersFor(T.WordPairProximityDocids, "w1")
+    val fts = footersFor(T.WordPairProximityDocids, "w1") match {
+      case Some(f) => f
+      case None => return None
+    }
     // a FREQUENT left word's pair rows can span many row groups — the
     // direct reader decodes row-group chunks in parallel (own reader per
     // chunk), so the crossover vs the fully parallel Spark scan sits far
@@ -1024,12 +1048,13 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     val band = Seq(DirectParquet.prefixBand(p))
     val acc = new RoaringBitmap()
     val ok = Seq(T.WordDocids, T.ExactWordDocids).forall { t =>
-      val fts = footersFor(t, "word")
-      DirectParquet.bandGroupCount(fts, band) <= maxGroups &&
-        DirectParquet.scanBands(fts, band) { g =>
-          if (g.getString("word", 0).startsWith(p))
-            acc.or(Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes))
-        }
+      footersFor(t, "word").exists { fts =>
+        DirectParquet.bandGroupCount(fts, band) <= maxGroups &&
+          DirectParquet.scanBands(fts, band) { g =>
+            if (g.getString("word", 0).startsWith(p))
+              acc.or(Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes))
+          }
+      }
     }
     if (ok) Some(acc) else None
   }
@@ -1263,29 +1288,29 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
         val pfxs = live.map(_._2).distinct
         val want = live.map(it => (it._1, it._2)).toSet
         // direct footer-pruned read (tables are prefix-sorted) first
-        val direct: Option[Seq[(String, RoaringBitmap)]] = {
-          val wordSet = words.toSet
-          val fts = footersFor(tblName, "prefix")
-          val out = Seq.newBuilder[(String, RoaringBitmap)]
-          // conjunctive page band over the words' span (same argument as
-          // directPairRows: wanted rows have wordCol ∈ wordSet ⊆ span;
-          // byte-ordered — see DirectParquet.spanBand)
-          val second = {
-            val (lo, hi) = DirectParquet.spanBand(words)
-            (wordCol, lo, hi)
-          }
-          val ok = DirectParquet.scanBands(fts,
-            DirectParquet.keyBands(pfxs), Some(second)) { g =>
-            val w = g.getString(wordCol, 0)
-            if (wordSet(w)) {
-              val p = g.getString("prefix", 0)
-              if (want((w, p)))
-                out += yKey(w, p, sideTag, g.getInteger("prox", 0)) ->
-                  Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
+        val direct: Option[Seq[(String, RoaringBitmap)]] =
+          footersFor(tblName, "prefix").flatMap { fts =>
+            val wordSet = words.toSet
+            val out = Seq.newBuilder[(String, RoaringBitmap)]
+            // conjunctive page band over the words' span (same argument as
+            // directPairRows: wanted rows have wordCol ∈ wordSet ⊆ span;
+            // byte-ordered — see DirectParquet.spanBand)
+            val second = {
+              val (lo, hi) = DirectParquet.spanBand(words)
+              (wordCol, lo, hi)
             }
+            val ok = DirectParquet.scanBands(fts,
+              DirectParquet.keyBands(pfxs), Some(second)) { g =>
+              val w = g.getString(wordCol, 0)
+              if (wordSet(w)) {
+                val p = g.getString("prefix", 0)
+                if (want((w, p)))
+                  out += yKey(w, p, sideTag, g.getInteger("prox", 0)) ->
+                    Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)
+              }
+            }
+            if (ok) Some(out.result()) else None
           }
-          if (ok) Some(out.result()) else None
-        }
         direct.map(_.iterator).getOrElse {
           tbl.where(col(wordCol).isin(words: _*) && col("prefix").isin(pfxs: _*))
             .select(col(wordCol), col("prefix"), col("prox"), col("docids"))
@@ -1387,7 +1412,10 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
     * own pages). None → caller runs the Spark aggregation. */
   private def directPrefixPairRanged(word: String, prefix: String,
       prefixIsRight: Boolean, side: String): Option[Map[String, RoaringBitmap]] = {
-    val fts = footersFor(T.WordPairProximityDocids, "w1")
+    val fts = footersFor(T.WordPairProximityDocids, "w1") match {
+      case Some(f) => f
+      case None => return None
+    }
     val (bands, second) =
       if (prefixIsRight) {
         val (lo, hi) = DirectParquet.prefixBand(prefix)
@@ -1478,22 +1506,24 @@ class GraftIndex(val spark: SparkSession, val dir: String, val settings: IndexSe
       val out = scala.collection.mutable.HashMap.empty[String,
         scala.collection.mutable.ArrayBuffer[(Int, RoaringBitmap)]]
       // per-key row-group gate: a key spanning many groups (a bare stop
-      // word's dense position rows) is refused BEFORE any decode
+      // word's dense position rows) is refused BEFORE any decode. Without
+      // footers the gate cannot run: every key takes the Spark scan and
+      // only the per-key row cap below bounds it
       val fts = footersFor(tableName, keyCol)
-      val (ok, big) = alive.toSeq.partition(k =>
-        DirectParquet.bandGroupCount(fts,
-          DirectParquet.keyBands(Seq(k))) <= GraftIndex.PosMaxGroupsPerKey)
+      val (ok, big) = alive.toSeq.partition(k => fts.forall(f =>
+        DirectParquet.bandGroupCount(f,
+          DirectParquet.keyBands(Seq(k))) <= GraftIndex.PosMaxGroupsPerKey))
       val okSet = ok.toSet
-      val direct = ok.isEmpty ||
+      val direct = ok.isEmpty || fts.exists(f =>
         Search.traced(s"pos-fetch($tag=${ok.length})")(
-          DirectParquet.scanBands(fts, DirectParquet.keyBands(ok)) { g =>
+          DirectParquet.scanBands(f, DirectParquet.keyBands(ok)) { g =>
             val k = g.getString(keyCol, 0)
             if (okSet(k))
               out.getOrElseUpdate(k,
                 scala.collection.mutable.ArrayBuffer.empty) +=
                 ((g.getInteger("position", 0),
                   Bitmaps.cboDeserialize(g.getBinary("docids", 0).getBytes)))
-          })
+          }))
       if (!direct) {
         // Spark fallback (direct read failed): same rows, one scan
         out.clear()

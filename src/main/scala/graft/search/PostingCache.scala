@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 /** Driver-side LRU cache of decoded posting lists, keyed by word — the
   * serving-tier twin of milli's LMDB point reads (one `word_docids` /
   * posting fetch hits the OS page cache in-process,
-  * `/root/reference/milli/src/search/mod.rs:136-242`). A long-lived Spark
-  * serving wrapper pays ONE pruned parquet fetch per cold word and then
-  * answers warm queries without launching any job.
+  * milli `src/search/mod.rs:136-242`). A cold miss batch
+  * is ONE driver-side footer-pruned parquet point read
+  * ([[GraftIndex.postingBlocksDirect]]), so cold and warm queries alike
+  * launch no Spark job.
   *
   * Scale story: the cache is byte-budgeted (default 256 MiB) and
   * fetch-through — at 10^12 docs it simply holds the hot head of the
   * dictionary (Zipf makes that most of the traffic) and evicts the tail;
-  * correctness never depends on it (a miss is a pruned distributed scan).
+  * correctness never depends on it (a miss the point reader cannot serve
+  * is a pruned distributed scan).
   */
 final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
   import index.spark
@@ -26,7 +28,8 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
 
   /** Fetch-through: postings of every word, as (docid, tf) pairs packed in a
     * long (docid high, tf low) so the hot array is primitive. Misses are
-    * fetched in ONE pruned posting-block scan; absent words cache empty. */
+    * fetched in ONE direct posting-block point read (a pruned Spark scan
+    * when the read fails); absent words cache empty. */
   def get(words: Seq[String]): Map[String, Array[Long]] = lru.getAll(words)(fetch)
 
   private def fetch(missing: Seq[String]): Map[String, Array[Long]] = {
@@ -35,10 +38,11 @@ final class PostingCache(index: GraftIndex, maxBytes: Long = 256L << 20) {
     val live = index.dictWords(missing)
     val rows: Array[(String, Int, Array[Byte])] =
       if (live.isEmpty) Array.empty
-      else index.postingBlocks
-        .where(col("word").isin(live: _*))
-        .select(col("word"), col("block_id"), col("bytes"))
-        .as[(String, Int, Array[Byte])].collect()
+      else index.postingBlocksDirect(live).getOrElse(
+        index.postingBlocks
+          .where(col("word").isin(live: _*))
+          .select(col("word"), col("block_id"), col("bytes"))
+          .as[(String, Int, Array[Byte])].collect())
     val byWord = rows.groupBy(_._1)
     missing.iterator.map { w =>
       val ps: Array[Long] = byWord.get(w) match {
